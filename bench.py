@@ -989,13 +989,17 @@ def main() -> None:
         rnd = os.environ.get("SPARK_GRAFT_ROUND")
         if rnd is None:
             import glob as _glob
+            import re as _re
 
+            # leading digits only: variant artifacts such as
+            # BENCH_r16_c8.json carry a suffix after the round number
             seen = [
-                int(p.rsplit("_r", 1)[1].split(".")[0])
+                int(m.group(1))
                 for pat in ("CORRECTNESS_r*.json", "BENCH_r*.json")
                 for p in _glob.glob(
                     os.path.join(os.path.dirname(__file__), pat)
                 )
+                if (m := _re.match(r"(\d+)", p.rsplit("_r", 1)[1]))
             ]
             rnd = str(max(seen) + 1 if seen else 0)
         full = f"BENCH_FULL_r{int(rnd):02d}.json"

@@ -162,3 +162,61 @@ CHANGESET_SCHEMA = T.StructType(
         T.StructField("payload", T.StringType(), True),
     ]
 )
+
+
+def project_schema(schema: T.StructType, fields: list[str]) -> T.StructType:
+    """The sub-schema of ``schema`` holding only ``fields``: top-level
+    names, or ``parent.child`` for a field of a nested struct.  Field
+    types, order and nullability are the full schema's.
+
+    ``from_json`` parses every field its schema names, and the
+    optimizer does not prune the schema to the fields a query reads,
+    so each normalizer parses with the projection of the wire format
+    it reads (the full schemas above stay the documented formats)."""
+    want: dict[str, set[str] | None] = {}
+    for f in fields:
+        top, _, child = f.partition(".")
+        if child:
+            sub = want.setdefault(top, set())
+            if sub is not None:
+                sub.add(child)
+        else:
+            want[top] = None
+    out = []
+    for field in schema.fields:
+        if field.name not in want:
+            continue
+        sub = want[field.name]
+        if sub is not None:
+            field = T.StructField(
+                field.name,
+                T.StructType(
+                    [c for c in field.dataType.fields if c.name in sub]
+                ),
+                field.nullable,
+            )
+        out.append(field)
+    return T.StructType(out)
+
+
+# The fields each normalizer reads (normalize.normalize_mongo / _pg /
+# _dms, and normalize_pg_retractions, which reads the pg set too).
+MONGO_CHANGESET_SCHEMA = project_schema(
+    MONGO_CDC_SCHEMA,
+    ["operationType", "fullDocument", "ts_ms", "ns.db", "ns.coll", "documentKey"],
+)
+PG_CHANGESET_SCHEMA = project_schema(
+    PG_CDC_SCHEMA,
+    ["before", "after", "source.ts_ms", "source.db", "source.table", "op"],
+)
+DMS_CHANGESET_SCHEMA = project_schema(
+    DMS_CDC_SCHEMA,
+    [
+        "data",
+        "metadata.timestamp",
+        "metadata.record-type",
+        "metadata.operation",
+        "metadata.schema-name",
+        "metadata.table-name",
+    ],
+)

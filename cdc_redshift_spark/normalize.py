@@ -24,10 +24,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdc_redshift_spark.envelopes import (
-    DMS_CDC_SCHEMA,
+    DMS_CHANGESET_SCHEMA,
     DMS_TS_FORMAT,
-    MONGO_CDC_SCHEMA,
-    PG_CDC_SCHEMA,
+    MONGO_CHANGESET_SCHEMA,
+    PG_CHANGESET_SCHEMA,
 )
 
 # Op-code normalization maps (SURVEY §2.4 F5).
@@ -180,9 +180,11 @@ def normalize_dms(
                 F.col("metadata.`table-name`").alias("table"),
                 F.get_json_object("data", f"$.{record_id_key}").alias("key"),
                 (
+                    # try_: an unparseable timestamp is a malformed
+                    # event (NULL ts_ms), not a failed batch
                     F.unix_micros(
-                        F.to_timestamp(
-                            F.col("metadata.timestamp"), DMS_TS_FORMAT
+                        F.try_to_timestamp(
+                            F.col("metadata.timestamp"), F.lit(DMS_TS_FORMAT)
                         )
                     )
                     / F.lit(1000)
@@ -291,19 +293,19 @@ def normalize_pg_retractions(
 
 def mongo_changeset(raw: DataFrame, **kw) -> DataFrame:
     """Kafka raw frame → Mongo ChangeSet (parse + normalize)."""
-    return normalize_mongo(parse_envelope(raw, MONGO_CDC_SCHEMA), **kw)
+    return normalize_mongo(parse_envelope(raw, MONGO_CHANGESET_SCHEMA), **kw)
 
 
 def pg_changeset(raw: DataFrame, **kw) -> DataFrame:
     """Kafka raw frame → Postgres ChangeSet (parse + normalize)."""
-    return normalize_pg(parse_envelope(raw, PG_CDC_SCHEMA), **kw)
+    return normalize_pg(parse_envelope(raw, PG_CHANGESET_SCHEMA), **kw)
 
 
 def dms_changeset(raw: DataFrame, **kw) -> DataFrame:
     """Kafka raw frame → DMS ChangeSet (parse + normalize)."""
-    return normalize_dms(parse_envelope(raw, DMS_CDC_SCHEMA), **kw)
+    return normalize_dms(parse_envelope(raw, DMS_CHANGESET_SCHEMA), **kw)
 
 
 def pg_retraction_stream(raw: DataFrame, **kw) -> DataFrame:
     """Kafka raw frame → Postgres retraction stream (parse + expand)."""
-    return normalize_pg_retractions(parse_envelope(raw, PG_CDC_SCHEMA), **kw)
+    return normalize_pg_retractions(parse_envelope(raw, PG_CHANGESET_SCHEMA), **kw)

@@ -30,10 +30,11 @@ at 100 TB.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import urllib.parse
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,8 @@ from cdc_redshift_spark.plans.merge import apply_changeset as merge_apply
 from cdc_redshift_spark.sinks.base import Sink
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+log = logging.getLogger(__name__)
 
 
 class CommitConflictError(RuntimeError):
@@ -176,6 +179,8 @@ class ParquetSink(Sink):
         #: by _occ_guard — the OCC read-set check
         self._occ_base: dict[tuple[str, str], int | None] = {}
         self._deferred_flips: list[tuple[str, str, int]] | None = None
+        #: the open :meth:`maintenance` scope (None outside one)
+        self._maintenance: SinkMaintenance | None = None
         #: last _merge_strategy join_plan dict (None = no stats
         #: consulted) — observability for tests and operators
         self.last_merge_plan: dict | None = None
@@ -528,7 +533,9 @@ class ParquetSink(Sink):
 
         Partition-pruned when ``partition_cols`` is a single column the
         changes carry and the target exists (see module docstring);
-        full merge + rewrite otherwise.
+        full merge + rewrite otherwise.  Inside a :meth:`maintenance`
+        scope the full rewrite also expires tombstones and computes
+        the table's stats (the pruned and DV paths do not).
         """
         self._occ_begin(db, table)
         changes = self._validate_batch(changes, f"changeset for {db}.{table}")
@@ -573,7 +580,7 @@ class ParquetSink(Sink):
             keep_tombstones=True,
             strategy=strategy,
         )
-        self._commit(db, table, new_state)
+        self._commit(db, table, new_state, fold=self._maintenance)
 
     def _merge_strategy(
         self, db: str, table: str, target: DataFrame | None, changes: DataFrame
@@ -1132,23 +1139,20 @@ class ParquetSink(Sink):
         merge: only partitions actually holding expirable tombstones
         are rewritten (a no-op — not even a new version — when there
         are none), the rest are hard-linked forward.
+
+        Cost: an early-exit probe job, plus a rewrite and a new version
+        when something expires.  A pipeline batch that rewrites the
+        whole table anyway folds this pass into its merge commit
+        (:meth:`maintenance`), at no extra job; the standalone pass is
+        what runs for tables the batch did not touch and for the
+        pruned (``partition_cols``) and DV (``merge_mode='dv'``)
+        layouts.
         """
         self._occ_begin(db, table)
         cur = self.read_table(self.spark, db, table, include_tombstones=True)
         if cur is None or "op" not in cur.columns:
             return
-        # null-safe: a NULL-ts tombstone is UNEXPIRABLE (its age is
-        # unknown), not expirable-by-three-valued-logic.  Without the
-        # isNotNull guard the full-rewrite filter `~expired` evaluates
-        # to NULL on such rows and DROPS them — while the pruned path
-        # (whose touched set only sees rows `where(expired)` matches)
-        # links their partitions forward and keeps them: the two paths
-        # disagreed, and an expired tombstone's key could resurrect.
-        expired = (
-            (F.col("op") == "delete")
-            & F.col(self.ts_col).isNotNull()
-            & (F.col(self.ts_col) < F.lit(before_ts_ms))
-        )
+        expired = self._expired(before_ts_ms)
         # no-op fast path on EVERY layout: nothing expirable → the
         # current version stands, no rewrite, no new snapshot (early-
         # exit scan of op + ts only)
@@ -1180,6 +1184,24 @@ class ParquetSink(Sink):
                 )
                 return
         self._commit(db, table, cur.where(~expired))
+
+    def _expired(self, before_ts_ms: int) -> Column:
+        """Rows a tombstone expiry at ``before_ts_ms`` drops; never
+        NULL, so ``~expired`` keeps every row it does not match.
+
+        Null-safe on both columns: a NULL-ts tombstone is UNEXPIRABLE
+        (its age is unknown), and a NULL op is data, not a tombstone
+        (the read_table contract).  Three-valued logic would make
+        ``~expired`` NULL on such rows and the full-rewrite filter
+        would DROP them, while the pruned path (whose touched set only
+        sees rows ``where(expired)`` matches) links their partitions
+        forward and keeps them: the paths would disagree, and an
+        expired tombstone's key could resurrect."""
+        return (
+            F.col("op").eqNullSafe(F.lit("delete"))
+            & F.col(self.ts_col).isNotNull()
+            & (F.col(self.ts_col) < F.lit(before_ts_ms))
+        )
 
     def _occ_begin(self, db: str, table: str) -> None:
         """Record the base version this operation reads its state from
@@ -1876,15 +1898,34 @@ class ParquetSink(Sink):
             self._write_schema_json(dest_db, dest_table, schema, 1)
         self._flip(dest_db, dest_table, 1)
 
-    def _commit(self, db: str, table: str, state: DataFrame) -> None:
+    def _commit(
+        self,
+        db: str,
+        table: str,
+        state: DataFrame,
+        fold: SinkMaintenance | None = None,
+    ) -> None:
+        """Write ``state`` as the next full snapshot version and flip.
+
+        ``fold`` (the open :meth:`maintenance` scope) folds the
+        scope's upkeep into this rewrite: tombstones past its horizon
+        are filtered out of ``state``, and for a table due for stats
+        the ``analyze(approx=True)`` aggregates ride the write as a
+        ``DataFrame.observe`` (no extra job), landing in ``_ANALYZE``
+        before :meth:`_flip`, so :meth:`_carry_analyze` finds fresh
+        stats and copies nothing over them."""
         d = self._dir(db, table)
         v = (self._latest_version(db, table) or 0) + 1
         self._occ_guard(db, table, v)
         path = os.path.join(d, f"v{v}")
-        writer = (
-            self._to_physical(db, table, self._layout(state))
-            .write.mode("overwrite")
-        )
+        expire = fold is not None and fold.expire_before_ms is not None
+        if expire and "op" in state.columns:
+            state = state.where(~self._expired(fold.expire_before_ms))
+        laid = self._layout(state)
+        pending_stats = None
+        if fold is not None and (db, table) in fold.analyze:
+            laid, pending_stats = self._observe_stats(laid)
+        writer = self._to_physical(db, table, laid).write.mode("overwrite")
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(path)
@@ -1893,7 +1934,77 @@ class ParquetSink(Sink):
         if self.zonemap_index_cols:
             self._build_zonemap(db, table, v)
         self._write_schema(db, table, state, v)
+        if pending_stats is not None:
+            try:
+                observed = pending_stats()
+                if observed is not None:
+                    self._write_analyze(db, table, v, observed)
+                    fold.analyzed.add((db, table))
+            except Exception:  # noqa: BLE001 — stats are planning-only:
+                # never fail a commit; the caller's standalone pass runs
+                log.warning(
+                    "folded stats for %s.%s v%d failed; left to the "
+                    "standalone analyze",
+                    db,
+                    table,
+                    v,
+                    exc_info=True,
+                )
+        if expire:
+            fold.expired.add((db, table))
         self._flip(db, table, v)
+
+    def _observe_stats(self, df: DataFrame):
+        """``(df', finish)``: ``df`` carrying the ``analyze(approx=True)``
+        aggregates as a ``DataFrame.observe``, and a zero-argument
+        function returning the stats dict once the action on ``df'``
+        has run (None if the metrics never arrived).  Tombstones are
+        masked out of every aggregate, because stats describe what
+        readers see.  ``(df, None)`` when the aggregates do not apply
+        to the frame's types; the standalone :meth:`analyze` then
+        reports that error on its own, never-fail path."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql import Observation
+
+        live = (
+            ~F.col("op").eqNullSafe(F.lit("delete"))
+            if "op" in df.columns
+            else None
+        )
+        aggs, finish = self._stats_pass(df, list(df.columns), True, live)
+        obs = Observation()
+        try:
+            observed = df.observe(obs, *aggs)
+        except AnalysisException:
+            return df, None
+
+        def result() -> dict | None:
+            row = self._observation(obs)
+            return None if row is None else finish(row)
+
+        return observed, result
+
+    @staticmethod
+    def _observation(obs, timeout_s: float = 60.0) -> dict | None:
+        """An Observation's metrics after its action has run, or None
+        if they do not arrive within ``timeout_s``.  The metrics come
+        through the listener bus, normally within milliseconds of the
+        action, but ``Observation.get`` would block forever on an
+        event the bus dropped."""
+        import time
+
+        from py4j.protocol import Py4JError
+
+        try:
+            done = obs._jo.future().isCompleted
+        except (AttributeError, Py4JError):  # no future to poll
+            return obs.get
+        deadline = time.monotonic() + timeout_s
+        while not done():
+            if time.monotonic() > deadline:
+                return None
+            time.sleep(0.002)
+        return obs.get
 
     def table_changes(
         self,
@@ -2028,6 +2139,14 @@ class ParquetSink(Sink):
         ``analyze_every`` refresh uses so maintenance never pays the
         expand at scale.
 
+        Cost: one aggregation job over the current snapshot.  A
+        pipeline batch that rewrites the whole table anyway computes
+        the same ``approx=True`` stats while writing it
+        (:meth:`maintenance`), at no extra job; this standalone pass
+        is what runs for tables the batch did not touch and for the
+        pruned (``partition_cols``) and DV (``merge_mode='dv'``)
+        layouts.
+
         Stats are per-version: readers of an older snapshot see that
         snapshot's own ``_ANALYZE`` (or none), never the future's.
         Returns the stats dict ``{col: {n, n_null, ndv, min, max,
@@ -2056,54 +2175,9 @@ class ParquetSink(Sink):
         missing = [c for c in cols if c not in df.columns]
         if missing:
             raise ValueError(f"analyze: unknown columns {missing}")
-        ndv = F.approx_count_distinct if approx else F.count_distinct
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, c in enumerate(cols):
-            aggs += [
-                F.count(F.col(c)).alias(f"__c{i}"),
-                ndv(F.col(c)).alias(f"__d{i}"),
-                F.min(F.col(c)).alias(f"__lo{i}"),
-                F.max(F.col(c)).alias(f"__hi{i}"),
-            ]
-        # composite-key NDV in the SAME pass: any one column's NDV can
-        # under-state the composite grain's multiplicity arbitrarily
-        # (keys[0]='db' on a ("db","table","key") sink has NDV 1), and
-        # the merge planner needs the real grain (COMPOSITE_KEY entry)
-        composite = (
-            len(self.keys) > 1 and all(k in df.columns for k in self.keys)
-        )
-        if composite:
-            aggs.append(
-                ndv(F.struct(*[F.col(k) for k in self.keys])).alias("__dk")
-            )
+        aggs, finish = self._stats_pass(df, cols, approx)
         row = df.agg(*aggs).first()
-        dts = dict(df.dtypes)
-
-        def js(x):
-            return x if isinstance(x, (int, float, str, bool, type(None))) else str(x)
-
-        stats = {
-            c: {
-                "n": row["__n"],
-                "n_null": row["__n"] - row[f"__c{i}"],
-                "ndv": row[f"__d{i}"],
-                "min": js(row[f"__lo{i}"]),
-                "max": js(row[f"__hi{i}"]),
-                "dtype": dts[c],
-            }
-            for i, c in enumerate(cols)
-        }
-        if composite:
-            from cdc_redshift_spark.operators.planner import COMPOSITE_KEY
-
-            stats[COMPOSITE_KEY] = {
-                "n": row["__n"],
-                "n_null": 0,
-                "ndv": max(row["__dk"], 1),
-                "min": None,
-                "max": None,
-                "dtype": "struct",
-            }
+        stats = finish(row)
         if key_sketch:
             from cdc_redshift_spark.operators.planner import CM_SKETCH
             from cdc_redshift_spark.operators.sketches import (
@@ -2147,6 +2221,83 @@ class ParquetSink(Sink):
                 ),
                 "dtype": "cm_sketch",
             }
+        self._write_analyze(db, table, v, stats)
+        return stats
+
+    def _stats_pass(
+        self,
+        df: DataFrame,
+        cols: list[str],
+        approx: bool,
+        live: Column | None = None,
+    ):
+        """``(aggs, finish)``: the one-pass ANALYZE aggregates over
+        ``cols`` of ``df``, and the function turning their result row
+        into the stats dict.  ``live`` restricts every aggregate to
+        the rows it holds (NULLs are invisible to count, NDV, min and
+        max), so an observer of a write that also carries tombstones
+        reports exactly what :meth:`analyze` of the committed
+        snapshot would."""
+        ndv = F.approx_count_distinct if approx else F.count_distinct
+
+        def only(c: Column) -> Column:
+            return c if live is None else F.when(live, c)
+
+        aggs = [F.count(only(F.lit(1))).alias("__n")]
+        for i, c in enumerate(cols):
+            aggs += [
+                F.count(only(F.col(c))).alias(f"__c{i}"),
+                ndv(only(F.col(c))).alias(f"__d{i}"),
+                F.min(only(F.col(c))).alias(f"__lo{i}"),
+                F.max(only(F.col(c))).alias(f"__hi{i}"),
+            ]
+        # composite-key NDV in the SAME pass: any one column's NDV can
+        # under-state the composite grain's multiplicity arbitrarily
+        # (keys[0]='db' on a ("db","table","key") sink has NDV 1), and
+        # the merge planner needs the real grain (COMPOSITE_KEY entry)
+        composite = (
+            len(self.keys) > 1 and all(k in df.columns for k in self.keys)
+        )
+        if composite:
+            aggs.append(
+                ndv(only(F.struct(*[F.col(k) for k in self.keys]))).alias(
+                    "__dk"
+                )
+            )
+        dts = dict(df.dtypes)
+
+        def js(x):
+            return x if isinstance(x, (int, float, str, bool, type(None))) else str(x)
+
+        def finish(row) -> dict:
+            stats = {
+                c: {
+                    "n": row["__n"],
+                    "n_null": row["__n"] - row[f"__c{i}"],
+                    "ndv": row[f"__d{i}"],
+                    "min": js(row[f"__lo{i}"]),
+                    "max": js(row[f"__hi{i}"]),
+                    "dtype": dts[c],
+                }
+                for i, c in enumerate(cols)
+            }
+            if composite:
+                from cdc_redshift_spark.operators.planner import COMPOSITE_KEY
+
+                stats[COMPOSITE_KEY] = {
+                    "n": row["__n"],
+                    "n_null": 0,
+                    "ndv": max(row["__dk"], 1),
+                    "min": None,
+                    "max": None,
+                    "dtype": "struct",
+                }
+            return stats
+
+        return aggs, finish
+
+    def _write_analyze(self, db: str, table: str, v: int, stats: dict) -> None:
+        """Persist ``stats`` as version ``v``'s ``_ANALYZE`` sidecar."""
         import json as _json
 
         path = os.path.join(self._dir(db, table), f"v{v}", "_ANALYZE")
@@ -2158,7 +2309,6 @@ class ParquetSink(Sink):
         age = os.path.join(self._dir(db, table), f"v{v}", "_ANALYZE_AGE")
         if os.path.exists(age):
             os.remove(age)
-        return stats
 
     def column_stats(
         self, db: str, table: str, version: int | None = None
@@ -2690,6 +2840,35 @@ class ParquetSink(Sink):
         """
         return SinkTransaction(self)
 
+    def maintenance(
+        self,
+        expire_before_ms: int | None = None,
+        analyze: Iterable[tuple[str, str]] = (),
+    ) -> SinkMaintenance:
+        """Fold table upkeep into the merge commits made inside the
+        scope.  Every :meth:`apply_changeset` that takes the full-
+        rewrite path drops the tombstones :meth:`expire_tombstones`
+        would drop at ``expire_before_ms`` (None: no expiry), and for
+        the ``(db, table)`` pairs in ``analyze`` writes the stats
+        ``analyze(approx=True)`` would compute on the new snapshot.
+        Both ride the rewrite the commit makes anyway, so they cost no
+        extra Spark job and no extra version.
+
+        The pruned (``partition_cols``) and DV (``merge_mode='dv'``)
+        merge paths rewrite only part of the table and do not fold.
+        The scope records what it folded in ``expired`` and
+        ``analyzed``; the caller runs the standalone passes for the
+        rest.
+
+        Usage::
+
+            with sink.maintenance(expire_before_ms=h, analyze=due) as m:
+                sink.apply_changeset("db", "orders", oc)
+            for db, table in set(due) - m.analyzed:
+                sink.analyze(db, table, approx=True)
+        """
+        return SinkMaintenance(self, expire_before_ms, analyze)
+
     def recover(self) -> list[tuple[str, str, int]]:
         """Roll FORWARD an interrupted transaction: flip any pointer
         the pending manifest promised but the crash pre-empted.
@@ -2755,4 +2934,33 @@ class SinkTransaction:
         for db, table, v in flips:
             self.sink._flip_now(db, table, v)
         os.remove(p)
+        return False
+
+
+class SinkMaintenance:
+    """Context manager folding tombstone expiry and ANALYZE into the
+    merge commits made while it is open (see
+    :meth:`ParquetSink.maintenance`).  ``expired`` and ``analyzed``
+    hold the tables whose commit folded each pass."""
+
+    def __init__(
+        self,
+        sink: ParquetSink,
+        expire_before_ms: int | None,
+        analyze: Iterable[tuple[str, str]],
+    ):
+        self.sink = sink
+        self.expire_before_ms = expire_before_ms
+        self.analyze = frozenset(analyze)
+        self.expired: set[tuple[str, str]] = set()
+        self.analyzed: set[tuple[str, str]] = set()
+
+    def __enter__(self) -> "SinkMaintenance":
+        if self.sink._maintenance is not None:
+            raise RuntimeError("nested sink maintenance scopes are not supported")
+        self.sink._maintenance = self
+        return self
+
+    def __exit__(self, et, ev, tb) -> bool:
+        self.sink._maintenance = None
         return False

@@ -28,6 +28,7 @@ from __future__ import annotations
 import logging
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -41,6 +42,13 @@ log = logging.getLogger(__name__)
 
 #: ChangeSet routing/key columns (cdc_redshift_spark.normalize).
 ROUTING_COLS = ("db", "table")
+#: LWW partition column that keeps each unroutable row apart
+_UNROUTABLE_ID = "__unroutable_id"
+
+
+def _unroutable():
+    """Rows the fan-out cannot route: NULL db or table."""
+    return F.col("db").isNull() | F.col("table").isNull()
 
 
 @dataclass
@@ -91,6 +99,16 @@ class CdcPipeline:
         sink table.  The horizon is EVENT time, so a tombstone survives
         exactly as long as an event old enough to lose to it can still
         arrive — the same lateness contract as a watermark.
+
+        Cost of both: a table whose merge commit rewrites it whole
+        (ParquetSink without ``partition_cols`` or ``merge_mode='dv'``)
+        gets its expiry and its refresh folded into that commit
+        (``sink.maintenance()``): no extra Spark job, no extra
+        version.  The rest pay the standalone passes after the
+        fan-out — an expiry probe (plus a rewrite when something
+        expires) and one aggregation job per refresh: tables the batch
+        did not touch, the pruned and DV layouts, sinks without
+        ``maintenance()``, ``route_root`` and ``atomic_batches``.
 
         ``route_root`` switches the fan-out strategy: instead of N
         per-table filter jobs, each batch lands in ONE
@@ -177,7 +195,23 @@ class CdcPipeline:
             # first so its replay-idempotence marker covers the batch.
             self.on_raw_batch(batch_id, raw)
 
-        changes = latest_per_key(self.changeset_fn(raw), keys=self.keys).persist()
+        # Each unroutable row (NULL db/table: a malformed envelope whose
+        # source/ns/metadata struct failed to parse) gets its own LWW
+        # window partition, by offset: on the routing keys alone all
+        # such rows share one partition, and all but one malformed
+        # event would vanish before the dead-letter write.  An extra
+        # partition column, not a `rn = 1 OR unroutable` filter, which
+        # would cost the window its WindowGroupLimit.
+        changes = (
+            latest_per_key(
+                self.changeset_fn(raw).withColumn(
+                    _UNROUTABLE_ID, F.when(_unroutable(), F.col("offset"))
+                ),
+                keys=(*self.keys, _UNROUTABLE_ID),
+            )
+            .drop(_UNROUTABLE_ID)
+            .persist()
+        )
         try:
             if not self.apply_delete:
                 changes_f = changes.where(~F.col("op").eqNullSafe(F.lit("delete")))
@@ -192,12 +226,11 @@ class CdcPipeline:
                 .agg(F.count(F.lit(1)).alias("n"), F.max("ts_ms").alias("mx"))
                 .collect()
             )
-            # UNROUTABLE rows (NULL db/table — a malformed envelope
-            # whose source/ns/metadata struct failed to parse) must
-            # not reach the fan-out: apply_one(None, ...) would die
-            # inside the sink's path join and ONE bad event would
-            # kill the whole stream.  They are dead-lettered (kept,
-            # observable) instead of crashing or silently vanishing.
+            # UNROUTABLE rows must not reach the fan-out:
+            # apply_one(None, ...) would die inside the sink's path
+            # join and ONE bad event would kill the whole stream.  They
+            # are dead-lettered (kept, observable) instead of crashing
+            # or silently vanishing.
             bad = [
                 r
                 for r in routing
@@ -207,9 +240,9 @@ class CdcPipeline:
                 n_bad = sum(r["n"] for r in bad)
                 self.stats.unroutable += n_bad
                 if self.dead_letter_root is not None:
-                    changes_f.where(
-                        F.col("db").isNull() | F.col("table").isNull()
-                    ).write.mode("append").parquet(self.dead_letter_root)
+                    changes_f.where(_unroutable()).write.mode("append").parquet(
+                        self.dead_letter_root
+                    )
                 log.warning(
                     "batch %d: %d unroutable event(s) with NULL "
                     "db/table %s",
@@ -221,9 +254,7 @@ class CdcPipeline:
                         else "DROPPED (set dead_letter_root to keep them)"
                     ),
                 )
-                changes_f = changes_f.where(
-                    F.col("db").isNotNull() & F.col("table").isNotNull()
-                )
+                changes_f = changes_f.where(~_unroutable())
             tables = [
                 (r["db"], r["table"])
                 for r in routing
@@ -235,6 +266,11 @@ class CdcPipeline:
             if batch_max is not None:
                 self._max_ts_ms = max(self._max_ts_ms or batch_max, batch_max)
 
+            # this batch's maintenance plan, known before the fan-out
+            # so the merge commits can fold it
+            horizon = self._expire_horizon()
+            due = self._analyze_due(tables)
+            scope = nullcontext()
             if self.route_root is not None:
                 # wide-fan-out path: ONE partitioned write per batch,
                 # merge every compact_every batches
@@ -250,13 +286,16 @@ class CdcPipeline:
                     )
                     self.sink.apply_changeset(db, table, slice_df)
 
-                from contextlib import nullcontext
-
-                scope = (
-                    self.sink.transaction()
-                    if self.atomic_batches
-                    else nullcontext()
-                )
+                if self.atomic_batches:
+                    # the transaction's all-or-nothing unit stays exactly
+                    # the batch's changesets; upkeep runs after it
+                    scope = self.sink.transaction()
+                elif (horizon is not None or due) and hasattr(
+                    self.sink, "maintenance"
+                ):
+                    scope = self.sink.maintenance(
+                        expire_before_ms=horizon, analyze=due
+                    )
                 with scope:
                     if len(tables) <= 1 or self.max_workers <= 1:
                         for db, table in tables:
@@ -269,8 +308,11 @@ class CdcPipeline:
                             list(ex.map(lambda t: apply_one(*t), tables))
             if self.on_batch is not None:
                 self.on_batch(batch_id, changes_f)
-            self._maybe_expire()
-            self._maybe_analyze(tables)
+            # standalone upkeep for whatever the commits did not fold
+            if horizon is not None:
+                self._expire(horizon, skip=getattr(scope, "expired", ()))
+            folded = getattr(scope, "analyzed", ())
+            self._run_analyze([t for t in due if t not in folded])
             log.info("batch %d: %d tables applied", batch_id, len(tables))
         finally:
             changes.unpersist()
@@ -291,23 +333,42 @@ class CdcPipeline:
         )
 
     def _maybe_analyze(self, tables: list[tuple[str, str]]) -> None:
-        """Periodic stats refresh (see __init__ ``analyze_every``):
-        every N batches that TOUCH a table, re-ANALYZE it, so the
-        stats that drive the merge planner's broadcast flip never
-        expire out from under a long-running pipeline (carried
-        sidecars age out after the sink's ``analyze_carry_limit``
-        commits — a stream that merges forever on one manual ANALYZE
-        would silently lose its CBO at that horizon).
+        """Periodic stats refresh (see __init__ ``analyze_every``) as a
+        standalone pass: count one touch of each table and re-ANALYZE
+        the ones due.  :meth:`process_batch` splits the two halves, so
+        that merge commits can fold the refresh first."""
+        self._run_analyze(self._analyze_due(tables))
+
+    def _analyze_due(self, tables: list[tuple[str, str]]) -> list[tuple[str, str]]:
+        """Count one touch of each table; return the ones whose stats
+        are due.  Every N batches that TOUCH a table, it is
+        re-ANALYZEd, so the stats that drive the merge planner's
+        broadcast flip never expire out from under a long-running
+        pipeline (carried sidecars age out after the sink's
+        ``analyze_carry_limit`` commits — a stream that merges forever
+        on one manual ANALYZE would silently lose its CBO at that
+        horizon).
 
         The schedule is PER TABLE (touch count), not the global batch
         counter: a table whose batches never aligned with a global
         ``batches % N`` phase would otherwise never refresh and expire
-        anyway.  Tables the sink has not materialized yet (the routed
-        fan-out defers commits to compaction) are skipped until they
-        exist.  Cost: one aggregation pass per touched table every N
-        touches — the same bounded-maintenance contract as
-        ``expire_every``/``compact_every``."""
+        anyway."""
         if self.analyze_every is None or not hasattr(self.sink, "analyze"):
+            return []
+        due = []
+        for db, table in tables:
+            n = self._analyze_touches.get((db, table), 0) + 1
+            self._analyze_touches[(db, table)] = n
+            if n % self.analyze_every == 0:
+                due.append((db, table))
+        return due
+
+    def _run_analyze(self, tables: list[tuple[str, str]]) -> None:
+        """Standalone ANALYZE of ``tables``: one aggregation job per
+        table.  Tables the sink has not materialized yet (the routed
+        fan-out defers commits to compaction) are skipped until they
+        exist; a failure is logged, never raised."""
+        if not tables:
             return
         # probe the knob ONCE from the signature — catching TypeError
         # around the call would misread a TypeError raised *inside* a
@@ -328,10 +389,6 @@ class CdcPipeline:
             has_approx = False
         exists = getattr(self.sink, "table_exists", None)
         for db, table in tables:
-            n = self._analyze_touches.get((db, table), 0) + 1
-            self._analyze_touches[(db, table)] = n
-            if n % self.analyze_every != 0:
-                continue
             if exists is not None and not exists(db, table):
                 continue
             try:
@@ -353,21 +410,27 @@ class CdcPipeline:
                     exc_info=True,
                 )
 
-    def _maybe_expire(self) -> None:
-        """Periodic tombstone compaction (see __init__).  Expiring
-        BEFORE the horizon would let a late stale event resurrect its
-        deleted key; expiring after it is pure state reclaim — the
-        sink's no-op fast path makes idle cycles free."""
+    def _expire_horizon(self) -> int | None:
+        """This batch's tombstone-expiry horizon, or None when no
+        expiry is due (see __init__).  Expiring BEFORE the horizon
+        would let a late stale event resurrect its deleted key;
+        expiring after it is pure state reclaim."""
         if (
             self.expire_after_ms is None
             or self._max_ts_ms is None
             or self.stats.batches % self.expire_every != 0
             or not hasattr(self.sink, "expire_tombstones")
         ):
-            return
-        horizon = self._max_ts_ms - self.expire_after_ms
+            return None
+        return self._max_ts_ms - self.expire_after_ms
+
+    def _expire(self, horizon: int, skip=()) -> None:
+        """Standalone tombstone expiry of every sink table not in
+        ``skip`` (the ones whose merge commit already folded it); the
+        sink's no-op fast path makes idle tables cost one probe."""
         for db, table in self.sink.list_tables():
-            self.sink.expire_tombstones(db, table, horizon)
+            if (db, table) not in skip:
+                self.sink.expire_tombstones(db, table, horizon)
 
     # -- stream driver (T1-T3) ----------------------------------------------
     def start(

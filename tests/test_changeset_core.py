@@ -432,3 +432,53 @@ def test_null_op_row_survives_sink_round_trip(spark, tmp_path):
                 " payload string",
             ),
         )
+
+
+_MALFORMED = [
+    '{"truncated": ',  # cut mid-envelope: nothing parses
+    "null",
+    "[1, 2]",
+    "",
+    # routing struct missing / of the wrong shape
+    '{"op": "c", "after": "{\\"id\\": 9}", "ts_ms": 5}',
+    '{"source": "not-a-struct", "ns": 7, "metadata": [1], "op": "u"}',
+    # read fields well-formed, an UNREAD field of the wrong type
+    '{"before": null, "after": "{\\"id\\": 4}", "op": "c", '
+    '"source": {"db": "d", "table": "t", "ts_ms": 9, "lsn": "x"}, '
+    '"txNumber": "y", "lsid": 3, "control": {"a": 1}}',
+    # a read field of the wrong type
+    '{"op": "u", "source": {"db": "d", "table": "t", "ts_ms": "late"}, '
+    '"ns": {"db": "d", "coll": "c"}, "ts_ms": "late", '
+    '"metadata": {"record-type": "data", "timestamp": 12}}',
+]
+
+
+@pytest.mark.parametrize("source", ["pg", "mongo", "dms"])
+def test_pruned_envelope_schemas_match_full_schemas(spark, source):
+    """Each *_changeset helper parses with the projection of its wire
+    schema to the fields its normalizer reads; on the synthetic
+    changelog fixtures plus malformed envelopes (truncated, wrong
+    shapes, wrong types in read and unread fields) the changeset is
+    the one the full wire schema gives."""
+    from cdc_redshift_spark import envelopes
+    from cdc_redshift_spark import normalize as nz
+    from cdc_redshift_spark.queries import cdc
+
+    sf = "/root/testdata/sf0.001"
+    synth, full, norm, pruned_fn = {
+        "pg": (cdc.synth_pg_changelog, envelopes.PG_CDC_SCHEMA,
+               nz.normalize_pg, pg_changeset),
+        "mongo": (cdc.synth_mongo_changelog, envelopes.MONGO_CDC_SCHEMA,
+                  nz.normalize_mongo, mongo_changeset),
+        "dms": (cdc.synth_dms_changelog, envelopes.DMS_CDC_SCHEMA,
+                nz.normalize_dms, dms_changeset),
+    }[source]
+    raw = synth(spark, sf).select("value", "offset").unionByName(
+        mk_raw(spark, [(v, 10**9 + i) for i, v in enumerate(_MALFORMED)])
+    )
+    pruned = pruned_fn(raw, offset_col="offset")
+    wide = norm(nz.parse_envelope(raw, full), offset_col="offset")
+    assert pruned.columns == wide.columns
+    assert pruned.count() == wide.count() > len(_MALFORMED)
+    assert pruned.exceptAll(wide).isEmpty()
+    assert wide.exceptAll(pruned).isEmpty()

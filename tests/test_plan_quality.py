@@ -385,15 +385,32 @@ def test_heavy_hitters_screen_then_semi_join(spark):
     assert plan.count("BroadcastNestedLoopJoin") == 1
 
 
-def test_aqe_coalesces_small_query_despite_wide_initial_partitions():
+def test_aqe_coalesces_small_query_despite_wide_initial_partitions(spark):
     """The session factory starts every shuffle at
     initialPartitionNum = max(256, 8*cpus) and relies on AQE to
     coalesce; pin that a small aggregate actually lands on FEW
     shuffle partitions (a host/config regression here would fragment
-    every tiny stage into 256 sorters — r6 VERDICT #7)."""
+    every tiny stage into 256 sorters — r6 VERDICT #7).
+
+    get_spark returns the suite's shared session with the production
+    confs applied to it; they are restored afterwards, so later tests
+    keep running under the suite's own confs."""
     from cdc_redshift_spark.session import get_spark
 
-    spark = get_spark("aqe-pin-test")
+    saved = dict(spark.conf.getAll)
+    try:
+        _check_aqe_coalesces(get_spark("aqe-pin-test"))
+    finally:
+        for k, v in spark.conf.getAll.items():
+            if saved.get(k) == v or not spark.conf.isModifiable(k):
+                continue
+            if k in saved:
+                spark.conf.set(k, saved[k])
+            else:
+                spark.conf.unset(k)
+
+
+def _check_aqe_coalesces(spark):
     df = (
         spark.range(10_000)
         .selectExpr("id % 7 AS k", "id AS v")

@@ -1939,3 +1939,73 @@ def test_occ_conflict_retry_and_orphan_clear(spark, tmp_path):
     os.makedirs(os.path.join(str(tmp_path / "plain"), "d", "t", "v2"), exist_ok=True)
     c.apply_changeset("d", "t", chdf(spark, [("2", 100, 1, "insert", "y")]))
     assert c.read_table(spark, "d", "t").count() == 2
+
+
+def _fold_sinks(spark, tmp_path, **kw):
+    """Two sinks holding the same state: tombstones old and new, a
+    NULL-op row and a NULL-ts tombstone (both must survive expiry)."""
+    rows = [
+        ("1", 100, 0, "insert", '{"v":1}'),
+        ("2", 100, 1, "delete", None),
+        ("3", 900, 2, "delete", None),
+        ("4", 100, 3, None, '{"v":4}'),
+        ("5", None, 4, "delete", None),
+        ("6", 150, 5, "insert", '{"v":6}'),
+    ]
+    out = []
+    for name in ("folded", "standalone"):
+        sink = ParquetSink(spark, str(tmp_path / name), **kw)
+        sink.apply_changeset("d", "t", chdf(spark, rows))
+        out.append(sink)
+    return out
+
+
+def test_maintenance_scope_folds_expire_and_analyze_into_the_merge(
+    spark, tmp_path
+):
+    """A merge inside sink.maintenance() commits exactly what merge →
+    expire_tombstones → analyze(approx=True) commits — the same rows,
+    tombstones included, and the same stats dict (HLL++ is
+    deterministic) — in ONE new version instead of two."""
+    folded, alone = _fold_sinks(spark, tmp_path, keys=("key",))
+    batch = [("1", 1000, 10, "update", '{"v":11}'), ("7", 1000, 11, "insert", "{}")]
+    with folded.maintenance(expire_before_ms=500, analyze=[("d", "t")]) as m:
+        folded.apply_changeset("d", "t", chdf(spark, batch))
+    assert m.expired == m.analyzed == {("d", "t")}
+    alone.apply_changeset("d", "t", chdf(spark, batch))
+    alone.expire_tombstones("d", "t", before_ts_ms=500)
+    want_stats = alone.analyze("d", "t", approx=True)
+
+    def rows(s):
+        df = s.read_table(spark, "d", "t", include_tombstones=True)
+        return sorted(df.collect(), key=lambda r: r.key)
+
+    assert rows(folded) == rows(alone)
+    assert {r.key for r in rows(folded)} == {"1", "3", "4", "5", "6", "7"}
+    assert folded.column_stats("d", "t") == want_stats
+    assert folded.versions("d", "t") == [1, 2]
+    assert alone.versions("d", "t") == [1, 2, 3]
+    # fresh stats, not a carried copy
+    assert not (tmp_path / "folded" / "d" / "t" / "v2" / "_ANALYZE_AGE").exists()
+
+
+def test_maintenance_scope_skips_partial_rewrites(spark, tmp_path):
+    """The pruned and DV merges rewrite part of the table: they fold
+    nothing, and the scope says so (the caller's standalone passes
+    run instead)."""
+    for i, kw in enumerate(
+        ({"merge_mode": "dv"}, {"partition_cols": ("ts_date",)})
+    ):
+        sink = ParquetSink(spark, str(tmp_path / str(i)), keys=("key",), **kw)
+        first = pchdf(spark, [("1", 100, 0, "insert", "{}", "2021-01-01"),
+                              ("2", 100, 1, "delete", None, "2021-01-01")])
+        batch = pchdf(spark, [("1", 200, 2, "update", "{}", "2021-01-02")])
+        if "partition_cols" not in kw:
+            first, batch = first.drop("ts_date"), batch.drop("ts_date")
+        sink.apply_changeset("d", "t", first)
+        with sink.maintenance(expire_before_ms=500, analyze=[("d", "t")]) as m:
+            sink.apply_changeset("d", "t", batch)
+        assert m.expired == m.analyzed == set(), kw
+        assert sink.column_stats("d", "t") is None
+        tombs = sink.read_table(spark, "d", "t", include_tombstones=True)
+        assert tombs.where("op = 'delete'").count() == 1

@@ -1016,3 +1016,159 @@ def test_malformed_envelope_without_dlq_drops_loudly_not_fatally(
     drain(pipe, spark, indir, ckpt)
     assert pipe.stats.unroutable == 1
     assert set(state(sink, spark)) == {"2"}
+
+
+def raw_frame(spark, lines: list[str]):
+    """A bounded raw batch (value, offset) from file-stream lines."""
+    recs = [json.loads(x) for x in lines]
+    return spark.createDataFrame(
+        [(r["value"], r["offset"]) for r in recs], "value string, offset long"
+    )
+
+
+def _fold_batches():
+    """Two tables; batch 0 deletes keys at ts 1000, batch 1 moves event
+    time far past the horizon, so its maintenance expires them."""
+    b0 = []
+    for t in ("t1", "t2"):
+        b0 += [pg_line("c", k, 1000, {"v": k}, 10 * k, table=t) for k in range(1, 6)]
+        b0 += [pg_line("d", 9, 1000, None, 99, table=t)]
+    b1 = [pg_line("u", k, 90_000, {"v": -k}, 1000 + k, table="t1") for k in (1, 2)]
+    b1 += [pg_line("u", 3, 90_000, {"v": 0}, 2000, table="t2")]
+    return b0, b1
+
+
+def _fold_pipeline(spark, root, sink_kw=None, **kw):
+    sink = ParquetSink(spark, root, keys=KEYS, **(sink_kw or {}))
+    pipe = CdcPipeline(
+        lambda raw: pg_changeset(raw, offset_col="offset"), sink, keys=KEYS, **kw
+    )
+    return pipe, sink
+
+
+def _spy(sink, name, calls):
+    real = getattr(sink, name)
+
+    def wrapper(db, table, *a, **kw):
+        calls.append((name, table))
+        return real(db, table, *a, **kw)
+
+    setattr(sink, name, wrapper)
+
+
+MAINT = dict(analyze_every=2, expire_every=2, expire_after_ms=10_000)
+
+
+def test_maintenance_batch_folds_into_the_merge_commit(spark, tmp_path):
+    """A maintenance batch whose tables all rewrite whole folds expiry
+    and ANALYZE into the merge commit: no standalone pass, one new
+    version per table instead of two, and the same rows and stats as
+    the standalone passes produce."""
+    b0, b1 = _fold_batches()
+    pipe, sink = _fold_pipeline(spark, str(tmp_path / "f"), **MAINT)
+    ref, ref_sink = _fold_pipeline(spark, str(tmp_path / "r"))
+    calls: list = []
+    for name in ("expire_tombstones", "analyze"):
+        _spy(sink, name, calls)
+    for i, lines in enumerate((b0, b1, b0 + b1)):
+        # 3rd batch touches both tables; not due (touch 3, batch 3)
+        pipe.process_batch(raw_frame(spark, lines), i)
+        ref.process_batch(raw_frame(spark, lines), i)
+        if i == 1:
+            # the reference runs the same upkeep as standalone passes
+            for t in ("t1", "t2"):
+                ref_sink.expire_tombstones("d1", t, 90_000 - 10_000)
+            ref_sink.analyze("d1", "t1", approx=True)
+            ref_sink.analyze("d1", "t2", approx=True)
+            assert calls == []
+            assert sink.versions("d1", "t1") == [1, 2]
+            assert ref_sink.versions("d1", "t1") == [1, 2, 3]
+            for t in ("t1", "t2"):
+                assert sink.column_stats("d1", t) == ref_sink.column_stats("d1", t)
+                tombs = sink.read_table(spark, "d1", t, include_tombstones=True)
+                assert tombs.where("op = 'delete'").count() == 0
+    for t in ("t1", "t2"):
+        got = sink.read_table(spark, "d1", t, include_tombstones=True)
+        want = ref_sink.read_table(spark, "d1", t, include_tombstones=True)
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_maintenance_fallbacks_run_the_standalone_passes(spark, tmp_path):
+    """Tables whose commit cannot fold still get their upkeep from the
+    standalone passes: the pruned (partition_cols) and DV layouts, a
+    table the batch did not touch, and atomic_batches."""
+    b0, b1 = _fold_batches()
+    b1_t1 = b1[:2]  # the t1 events only
+    cases = {
+        "pruned": ({"partition_cols": ("ts_date",)}, {}, b1,
+                   [("expire_tombstones", "t1"), ("expire_tombstones", "t2"),
+                    ("analyze", "t1"), ("analyze", "t2")]),
+        "dv": ({"merge_mode": "dv"}, {}, b1,
+               [("expire_tombstones", "t1"), ("expire_tombstones", "t2"),
+                ("analyze", "t1"), ("analyze", "t2")]),
+        # t2 is untouched: its expiry runs standalone, and t2 is not due
+        # for stats (its touch count did not advance)
+        "untouched": ({}, {}, b1_t1, [("expire_tombstones", "t2")]),
+        "atomic": ({}, {"atomic_batches": True}, b1,
+                   [("expire_tombstones", "t1"), ("expire_tombstones", "t2"),
+                    ("analyze", "t1"), ("analyze", "t2")]),
+    }
+    for name, (sink_kw, pipe_kw, second, want) in cases.items():
+        pipe, sink = _fold_pipeline(
+            spark, str(tmp_path / name), sink_kw, **MAINT, **pipe_kw
+        )
+        pipe.process_batch(raw_frame(spark, b0), 0)
+        calls: list = []
+        for fn in ("expire_tombstones", "analyze"):
+            _spy(sink, fn, calls)
+        pipe.process_batch(raw_frame(spark, second), 1)
+        assert sorted(calls) == sorted(want), name
+        for t in ("t1", "t2"):
+            tombs = sink.read_table(spark, "d1", t, include_tombstones=True)
+            assert tombs.where("op = 'delete'").count() == 0, (name, t)
+        assert sink.column_stats("d1", "t1") is not None, name
+
+
+def test_maintenance_batch_adds_no_spark_jobs(spark, tmp_path):
+    """statusTracker pin: a batch with analyze_every=1, expire_every=1
+    runs no more Spark jobs than the same batch with maintenance off."""
+    b0, b1 = _fold_batches()
+    st = spark.sparkContext.statusTracker()
+
+    def jobs_of_second_batch(root, **kw):
+        pipe, _ = _fold_pipeline(spark, root, max_workers=1, **kw)
+        pipe.process_batch(raw_frame(spark, b0), 0)
+        raw = raw_frame(spark, b1)
+        before = set(st.getJobIdsForGroup(None))
+        pipe.process_batch(raw, 1)
+        return len(set(st.getJobIdsForGroup(None)) - before)
+
+    off = jobs_of_second_batch(str(tmp_path / "off"))
+    on = jobs_of_second_batch(
+        str(tmp_path / "on"),
+        analyze_every=1, expire_every=1, expire_after_ms=10_000,
+    )
+    assert 0 < on <= off, (on, off)
+
+
+def test_every_malformed_envelope_is_dead_lettered(spark, tmp_path):
+    """Malformed envelopes all normalize to NULL routing keys; the LWW
+    window keeps each one apart (by offset), so every one of them is
+    counted and dead-lettered instead of all collapsing into one row."""
+    dlq = str(tmp_path / "dlq")
+    pipe, sink = _fold_pipeline(
+        spark, str(tmp_path / "s"), dead_letter_root=dlq
+    )
+    bad = [
+        json.dumps({"value": '{"op": "c", "after": "{\\"id\\"', "offset": o})
+        for o in range(100, 105)
+    ]
+    pipe.process_batch(
+        raw_frame(spark, [pg_line("c", 1, 100, {"v": "a"}, 0)] + bad), 0
+    )
+    assert pipe.stats.unroutable == 5
+    dl = spark.read.parquet(dlq)
+    assert dl.count() == 5
+    assert sorted(r["offset"] for r in dl.collect()) == list(range(100, 105))
+    assert "__unroutable_id" not in dl.columns
+    assert state(sink, spark) == {"1": {"id": 1, "v": "a"}}
